@@ -800,10 +800,12 @@ class MetricEngine:
         rv = self.catalog.get(name)
         if rv.state is None:
             raise QueryError(f"metric view {name!r} has no materialized state to fold into")
-        self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
         delta = self._materialize_dims(rv.spec, delta_source_rows)
-        for built in rv.state.rollups.values():
-            fold_increment(self.spark, built, delta)
+        try:
+            for built in rv.state.rollups.values():
+                fold_increment(self.spark, built, delta)
+        finally:
+            self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
         if rv.state.baseline:
             self._compiler.baseline_projection(rv.spec, delta_source_rows).write.mode(
                 "append"
@@ -857,11 +859,13 @@ class MetricEngine:
 
         for built in rv.state.rollups.values():
             validate_retractable(built)
-        self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
         b = self._materialize_dims(rv.spec, before)
         a = self._materialize_dims(rv.spec, after)
-        for built in rv.state.rollups.values():
-            fold_retractions(self.spark, built, b, a)
+        try:
+            for built in rv.state.rollups.values():
+                fold_retractions(self.spark, built, b, a)
+        finally:
+            self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
 
     def refresh_all(self) -> None:
         self._refresh_many(

@@ -22,14 +22,29 @@ Routing rules (``README.md:424-431``):
 3. otherwise the baseline snapshot if present;
 4. otherwise the live source.
 
+Serving: a routed read is dominated by Spark's per-job floor, not by the
+|dim-combination| rows it touches. A rollup whose recorded ``n_rows`` is at
+most :data:`LOCAL_ROLLUP_MAX_ROWS` is therefore read on the driver (pyarrow,
+no Spark job) and served as a ``LocalRelation`` with the Spark schema pinned
+from the parquet footer. Catalyst's ``ConvertToLocalRelation`` evaluates
+filters and projections over it on the driver, so an exact-cover or
+filter-only read runs no job at all; a re-aggregation reads it through
+``coalesce(1)``, whose ``SinglePartition`` output needs no ``Exchange``
+(one job, one task). Larger rollups keep a cached parquet scan. The driver
+read assumes local-filesystem storage, as the swap-write below does.
+
 Refresh (= ``scripts/refresh_metric_views.py`` semantics, O5 in SURVEY §2.7)
 recomputes each rollup with write-temp-then-swap so readers never see a
 half-written table; ``CREATE OR REPLACE`` of an unchanged spec preserves
-rollup state (``macros/generate_metric_views.sql:78-79``).
+rollup state (``macros/generate_metric_views.sql:78-79``). Every write of a
+rollup (build, refresh, incremental and CDC folds) records the rows it
+stored in ``BuiltRollup.n_rows``, and its served copy is dropped after
+the write.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -56,7 +71,8 @@ class BuiltRollup:
     path: str
     # measure name -> its decomposition (partial col layout in the table)
     decompositions: dict[str, Decomposition] = field(default_factory=dict)
-    # row count recorded at build time — the router's cost estimate
+    # stored row count, recorded by every write (build and folds) — the
+    # router's cost estimate and the driver-side serving gate
     n_rows: Optional[int] = None
 
 
@@ -68,6 +84,47 @@ class MaterializationState:
     rollups: dict[str, BuiltRollup] = field(default_factory=dict)
 
 
+# Rollups of at most this many stored rows are served from the driver (see
+# the module docstring). Break-even measured on 4 cores, local[4], with a
+# 2-dim, 3-partial rollup: a warm re-aggregation through coalesce(1) over
+# the LocalRelation costs the same as over the cached scan at ~10k rows
+# (0.66x at 1k, 0.97-1.01x at 10k, 1.3x at 15k, 1.9x at 30k), because one
+# task then does all the work; the first read after a write breaks even
+# later (0.84x at 30k, 1.8x at 100k), since the cached path pays a
+# cache-fill job.
+LOCAL_ROLLUP_MAX_ROWS = 10_000
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_local(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """Read a Spark-written parquet directory on the driver into a
+    ``LocalRelation`` — no Spark job. None when the footer carries no
+    Spark schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    # INT96 (Spark's TIMESTAMP encoding) read in microseconds: pyarrow's
+    # nanosecond default overflows outside 1677-2262
+    table = pq.read_table(path, coerce_int96_timestamp_unit="us")
+    raw = (table.schema.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    # pin the footer's Spark types (parquet alone cannot tell TIMESTAMP_NTZ
+    # from an INT96 TIMESTAMP); stored TIMESTAMPs are UTC instants, so they
+    # are marked UTC instead of being localized to the session time zone
+    schema = StructType.fromJson(json.loads(raw))
+    table = table.cast(to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of *df*'s optimized plan: driver-side, no
+    job. Reached through the private ``_jdf`` chain."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def _swap_write(df: DataFrame, spark: SparkSession, path: str) -> None:
     """Write parquet atomically-ish: temp dir, then swap into place."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
@@ -75,6 +132,16 @@ def _swap_write(df: DataFrame, spark: SparkSession, path: str) -> None:
     if os.path.exists(path):
         shutil.rmtree(path)
     os.replace(tmp, path)
+
+
+def _write_counted(df: DataFrame, spark: SparkSession, path: str) -> int:
+    """:func:`_swap_write` *df* and return the rows written, counted by an
+    ``Observation`` that rides the write (no extra job)."""
+    from pyspark.sql import Observation
+
+    ob = Observation()
+    _swap_write(df.observe(ob, F.count(F.lit(1)).alias("n")), spark, path)
+    return int(ob.get["n"])
 
 
 class WindowGrainProvider:
@@ -129,9 +196,13 @@ class WindowGrainProvider:
                 sel.append((p_col, hit[0], fn))
             if sel is None:
                 continue
-            df = self.mgr._read_rollup(built)
+            df, local = self.mgr._read_rollup(built)
             if self.query.where:
                 df = df.filter(F.expr(self.query.where))
+            if local:
+                # one partition: the window (and any re-aggregation) above
+                # needs no Exchange
+                df = df.coalesce(1)
             if set(built.spec.dimensions) == set(grain_cols):
                 # stored rows ARE the grain — merging a single partial is
                 # the identity, so project instead of re-aggregating (saves
@@ -162,31 +233,48 @@ class RollupManager:
         self.spark = spark
         self.compiler = compiler
         self.storage_dir = storage_dir
-        # rollup tables are tiny by construction (|dim combinations| rows)
-        # — keep them cached in memory so a routed query costs no file
-        # listing / schema inference / scan. Guarded by a lock: refreshes
+        # rollup tables are |dim combinations| rows — keep each one's
+        # DataFrame so a routed query costs no file listing / schema
+        # inference: small ones as a driver-side LocalRelation (no Spark
+        # job), larger ones as a cached scan. Guarded by a lock: refreshes
         # of different views may run concurrently (engine._refresh_many).
         import threading
 
-        self._df_cache: dict[str, DataFrame] = {}
+        # path -> (rows, held on the driver)
+        self._df_cache: dict[str, tuple[DataFrame, bool]] = {}
         self._cache_lock = threading.Lock()
 
-    def _read_rollup(self, built: BuiltRollup) -> DataFrame:
+    def _read_rollup(self, built: BuiltRollup) -> tuple[DataFrame, bool]:
+        """The rollup's rows, and whether they are a driver-side
+        LocalRelation (re-aggregate them through ``coalesce(1)``)."""
         with self._cache_lock:
-            df = self._df_cache.get(built.path)
-            if df is None:
-                df = self.spark.read.parquet(built.path).cache()
-                self._df_cache[built.path] = df
-        return df
+            hit = self._df_cache.get(built.path)
+            if hit is None:
+                df = None
+                if built.n_rows is not None and built.n_rows <= LOCAL_ROLLUP_MAX_ROWS:
+                    df = _read_local(self.spark, built.path)
+                if df is None:
+                    hit = (self.spark.read.parquet(built.path).cache(), False)
+                else:
+                    hit = (df, True)
+                self._df_cache[built.path] = hit
+        return hit
 
     def _invalidate(self, path_prefix: str) -> None:
+        """Forget the served copy of every rollup under *path_prefix*;
+        call it after rewriting them."""
         with self._cache_lock:
-            stale = [p for p in self._df_cache if p.startswith(path_prefix)]
+            stale = [
+                p for p in self._df_cache
+                if p == path_prefix or p.startswith(path_prefix + os.sep)
+            ]
             for p in stale:
-                try:
-                    self._df_cache.pop(p).unpersist()
-                except Exception:
-                    pass
+                df, local = self._df_cache.pop(p)
+                if not local:
+                    try:
+                        df.unpersist()
+                    except Exception:
+                        pass
 
     # ---------------- build / refresh ----------------
 
@@ -214,7 +302,6 @@ class RollupManager:
         state = state or MaterializationState()
         if not spec.materialization:
             return state
-        self._invalidate(os.path.join(self.storage_dir, spec.name))
         src = self.compiler.source_plan(spec)
         redundant_baseline = (
             source_is_materialized
@@ -256,6 +343,7 @@ class RollupManager:
         finally:
             if cache:
                 src.unpersist()
+            self._invalidate(os.path.join(self.storage_dir, spec.name))
         return state
 
     def _build_grouping_sets(
@@ -316,11 +404,11 @@ class RollupManager:
         # orders of magnitude above the constant — it only matters at
         # toy scale, where the direct grouping sets avoid paying an
         # extra job-floor exchange. Estimation failure falls back to
-        # two-level (the scale-safe default).
+        # two-level (the scale-safe default); tests pin the private chain
+        # in _estimated_bytes, so a Spark upgrade that breaks it fails them
+        # instead of silently flipping every build to two-level.
         try:
-            src_bytes = int(
-                flat._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
+            src_bytes = _estimated_bytes(flat)
         except Exception:
             src_bytes = 1 << 62
         two_level_worthwhile = src_bytes >= 16 * 1024 * 1024
@@ -433,15 +521,9 @@ class RollupManager:
         path = self._path(spec.name, r.name)
         # the router's row-count cost estimate rides the write as an
         # observed metric instead of a separate parquet read-back job
-        from pyspark.sql import Observation
-
-        ob = Observation()
-        _swap_write(
-            rolled.observe(ob, F.count(F.lit(1)).alias("n")), self.spark, path
-        )
-        return BuiltRollup(
-            spec=r, path=path, decompositions=decs, n_rows=int(ob.get["n"])
-        )
+        n_rows = _write_counted(rolled, self.spark, path)
+        self._invalidate(path)
+        return BuiltRollup(spec=r, path=path, decompositions=decs, n_rows=n_rows)
 
     def drop(self, spec_name: str) -> None:
         d = os.path.join(self.storage_dir, spec_name)
@@ -594,7 +676,7 @@ class RollupManager:
         re-evaluation; merging is ``sum``/``min``/``max`` of partial
         columns, then each measure's finalize expression.
         """
-        df = self._read_rollup(built)
+        df, local = self._read_rollup(built)
         if query.where:
             # rollup tables store every dim under its declared name, so the
             # slice filters stored rows directly — before re-aggregation,
@@ -604,7 +686,8 @@ class RollupManager:
             # exact cover: stored rows are already at the query grain — no
             # re-aggregation, the plan is a single-stage projection with
             # zero exchanges (matters at any scale: no shuffle, no codegen
-            # for an aggregate).
+            # for an aggregate). Over a LocalRelation the optimizer folds
+            # filter and projection on the driver: no job at all.
             return df.select(
                 *[F.col(d) for d in query.dimensions],
                 *[
@@ -620,6 +703,9 @@ class RollupManager:
                 if p_col not in seen:
                     seen.add(p_col)
                     agg_cols.append(merge_column(dec.merges[p_col], p_col).alias(p_col))
+        if local:
+            # one partition (SinglePartition): no Exchange for the groupBy
+            df = df.coalesce(1)
         merged = df.groupBy(*[F.col(d) for d in query.dimensions]).agg(*agg_cols)
         out_cols = [F.col(d) for d in query.dimensions] + [
             F.expr(built.decompositions[m].finalize).alias(m) for m in query.measures

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 
 from ..functions.aggregates import merge_column
-from ..plans.rollup import BuiltRollup, _swap_write
+from ..plans.rollup import BuiltRollup, _write_counted
 
 
 def _partial_agg(delta: DataFrame, built: BuiltRollup) -> DataFrame:
@@ -66,11 +66,12 @@ def fold_increment(
 
     `delta_source_rows` must be the same relation shape the rollup was
     built from (the metric view's filtered+joined source) restricted to
-    the *new* rows — e.g. the latest date partition.
+    the *new* rows — e.g. the latest date partition. Updates
+    ``built.n_rows`` to the rows now stored.
     """
     delta = _partial_agg(delta_source_rows, built)
     old = spark.read.parquet(built.path)
-    _swap_write(merge_partials(old, delta, built), spark, built.path)
+    built.n_rows = _write_counted(merge_partials(old, delta, built), spark, built.path)
 
 
 def streaming_rollup(
@@ -104,7 +105,7 @@ def streaming_rollup(
             merged = merge_partials(old, delta, built)
         else:
             merged = delta
-        _swap_write(merged, batch_df.sparkSession, built.path)
+        built.n_rows = _write_counted(merged, batch_df.sparkSession, built.path)
 
     return (
         stream.writeStream.foreachBatch(fold)
@@ -245,11 +246,17 @@ def fold_retractions(
 
     from pyspark.sql import Observation
 
+    # the surviving-row count (the rollup's new n_rows) rides the same
+    # observation: the rows the zero-count prune below keeps
+    kept = F.col(count_col) != 0
     ob = Observation()
-    observed = merged.observe(ob, F.count_if(bad).alias("n_bad"))
+    observed = merged.observe(
+        ob, F.count_if(bad).alias("n_bad"), F.count_if(kept).alias("n")
+    )
     tmp = f"{built.path}.tmp-{uuid.uuid4().hex[:8]}"
-    observed.filter(F.col(count_col) != 0).write.mode("overwrite").parquet(tmp)
-    if int(ob.get["n_bad"]) > 0:
+    observed.filter(kept).write.mode("overwrite").parquet(tmp)
+    metrics = ob.get
+    if int(metrics["n_bad"]) > 0:
         shutil.rmtree(tmp, ignore_errors=True)
         where = (
             f"no rollup state at {built.path!r} and the change batch"
@@ -266,6 +273,7 @@ def fold_retractions(
     if os.path.exists(built.path):
         shutil.rmtree(built.path)
     os.replace(tmp, built.path)
+    built.n_rows = int(metrics["n"])
 
 
 def streaming_rollup_cdc(

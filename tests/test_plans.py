@@ -245,3 +245,106 @@ def test_explain_routed_plan(engine):
     assert text.startswith("== Route ==\nrollup:revenue_by_segment\n"), text[:200]
     assert "Physical Plan" in text
     assert "fct_orders" not in text
+
+
+def _job_ids(spark, fn) -> list[int]:
+    """Spark job ids that *fn* ran, counted through a statusTracker job
+    group on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan gate")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_exact_cover_routed_read_runs_no_job(engine, spark):
+    """A tiny rollup is served from the driver: the first exact-cover read
+    after a refresh (driver-side load included) and its WHERE-sliced
+    variants with changing literals run ZERO Spark jobs — Catalyst's
+    ConvertToLocalRelation evaluates filter + projection over the
+    LocalRelation."""
+    engine.refresh("mv_order_metrics")
+    mv = engine.metric_view("mv_order_metrics")
+    rows: list = []
+    routes: list = []
+
+    def read():
+        for where in (None, "order_status = 'F'", "order_status = 'O'"):
+            df, route = mv.query_routed(
+                ["market_segment", "order_status"],
+                ["total_revenue", "total_orders"],
+                where=where,
+            )
+            routes.append(route)
+            rows.append(df.collect())
+
+    assert _job_ids(spark, read) == []
+    assert set(routes) == {"rollup:revenue_by_segment"}
+    assert rows[0] and {r["order_status"] for r in rows[1]} == {"F"}
+    assert {r["order_status"] for r in rows[2]} == {"O"}
+    # the served rows are the rollup's answer, not a stale or empty copy
+    q = MetricQuery(
+        mv.spec, ("market_segment", "order_status"), ("total_revenue", "total_orders")
+    )
+    live = {
+        (r["market_segment"], r["order_status"]): r["total_orders"]
+        for r in engine._compiler.compile(q).collect()
+    }
+    assert {(r["market_segment"], r["order_status"]): r["total_orders"]
+            for r in rows[0]} == live
+
+
+def test_reaggregating_routed_read_plans_no_exchange(engine, spark):
+    """Re-aggregating a tiny rollup reads it through coalesce(1): the
+    child is SinglePartition, so EnsureRequirements plans no Exchange —
+    one job, no shuffle."""
+    mv = engine.metric_view("mv_order_metrics")
+    df, route = mv.query_routed(["market_segment"], ["total_revenue"])
+    assert route == "rollup:revenue_by_segment"
+    jobs = _job_ids(spark, df.collect)
+    plan = _physical(df)
+    assert "LocalTableScan" in plan, plan[:2000]
+    assert plan.count("Exchange") == 0, plan[:2000]
+    assert len(jobs) == 1, jobs
+
+
+def test_trailing_window_grain_read_plans_no_exchange(engine):
+    """The trailing-7d grain read from the daily rollup (WindowGrainProvider)
+    keeps the window sort and the final reduction inside one partition: no
+    Exchange anywhere in the plan."""
+    mv = engine.metric_view("mv_order_metrics")
+    df, route = mv.query_routed(["market_segment"], ["trailing_7d_revenue"])
+    assert route == "live+grain:daily_revenue"
+    df.collect()
+    plan = _physical(df)
+    assert "Window" in plan and "LocalTableScan" in plan, plan[:2500]
+    assert plan.count("Exchange") == 0, plan[:2500]
+
+
+def test_rollup_above_local_limit_keeps_cached_scan(engine, monkeypatch):
+    """A rollup with more stored rows than LOCAL_ROLLUP_MAX_ROWS keeps the
+    cached parquet scan (and the re-aggregation's Exchange)."""
+    import os
+
+    from dbt_databricks_metrics_spark.plans import rollup as rollup_mod
+
+    monkeypatch.setattr(rollup_mod, "LOCAL_ROLLUP_MAX_ROWS", 0)
+    mgr = engine._rollups
+    view_dir = os.path.join(mgr.storage_dir, "mv_order_metrics")
+    mgr._invalidate(view_dir)
+    try:
+        mv = engine.metric_view("mv_order_metrics")
+        df, route = mv.query_routed(["market_segment"], ["total_revenue"])
+        assert route == "rollup:revenue_by_segment"
+        df.collect()
+        plan = _physical(df)
+        assert "InMemoryTableScan" in plan, plan[:2000]
+        assert "LocalTableScan" not in plan, plan[:2000]
+        assert plan.count("Exchange") >= 1, plan[:2000]
+    finally:
+        mgr._invalidate(view_dir)

@@ -336,3 +336,43 @@ def test_explain_route(spark, sf_dir, tmp_path_factory):
     )
     assert sroute.split("+grain:")[0] == exs["route"], (sroute, exs["route"])
     assert "split" in exs["reason"]
+
+
+def test_build_size_gate_reads_catalyst_estimate(engine, monkeypatch):
+    """The two-level build gate reads Catalyst's size estimate through a
+    private ``_jdf`` chain. Pin it: the chain must return a real estimate
+    for the tiny fixture source (a Spark upgrade that breaks it would
+    otherwise fall back silently and flip every build to two-level), and
+    a multi-rollup build over that source must take the DIRECT grouping
+    sets (no fine-grain pre-aggregation below them)."""
+    from dbt_databricks_metrics_spark.plans import rollup as rollup_mod
+
+    rv = engine.catalog.get("mv_order_metrics")
+    compiler = engine._compiler
+    flat = compiler.baseline_projection(rv.spec, compiler.source_plan(rv.spec))
+    est = rollup_mod._estimated_bytes(flat)  # raises if the chain broke
+    assert 0 < est < 16 * 1024 * 1024, est
+
+    estimates: list[int] = []
+    real_estimate = rollup_mod._estimated_bytes
+
+    def spy_estimate(df):
+        estimates.append(real_estimate(df))
+        return estimates[-1]
+
+    grouped_over_partials: list[bool] = []
+    frame_cls = type(flat)
+    real_grouping_sets = frame_cls.groupingSets
+
+    def spy_grouping_sets(self, *args, **kwargs):
+        # the two-level shape runs grouping sets over the fine aggregate,
+        # whose columns are the partials (_p_*); the direct shape over the
+        # flattened source
+        grouped_over_partials.append(any(c.startswith("_p_") for c in self.columns))
+        return real_grouping_sets(self, *args, **kwargs)
+
+    monkeypatch.setattr(rollup_mod, "_estimated_bytes", spy_estimate)
+    monkeypatch.setattr(frame_cls, "groupingSets", spy_grouping_sets)
+    engine.refresh("mv_order_metrics")
+    assert len(estimates) == 1 and estimates[0] < 16 * 1024 * 1024, estimates
+    assert grouped_over_partials == [False]
